@@ -7,6 +7,9 @@
   plane weights w[i][j] = ((i*37 + j*101) % 19) - 9 keep the arithmetic
   exactly reproducible in ANSI SQL (DuckDB oracle parity) — at real
   scale these would be seeded gaussian planes.
+- IVF-flat (knn_ivf): a coarse quantizer shipped as broadcast DATA
+  (one packed centroid row), map-only cell assignment, nprobe probing
+  and a broadcast cell equi-join.
 """
 
 from __future__ import annotations
@@ -23,23 +26,13 @@ def _expr_vec(vals) -> Column:
     converts element-by-element over py4j (~0.8 ms/element — 1.6 s of DRIVER
     time for a 32x64 plane matrix, paid per query construction), F.expr
     parses the identical literal in ~2 ms. Python float repr round-trips,
-    so values are bit-identical to the F.lit form. Non-finite elements
-    (NaN centroids from NaN embeddings) would render as unparseable
-    'nan'/'inf' tokens — rejected up front with a real message instead of
-    a SQL parse error (ADVICE r4)."""
+    so values are bit-identical to the F.lit form. Only the integer plane
+    weights are rendered this way, so every element is finite."""
     return F.expr("array(" + ",".join(_d(x) for x in vals) + ")")
 
 
 def _d(x) -> str:
-    import math
-
-    x = float(x)
-    if not math.isfinite(x):
-        raise ValueError(
-            f"non-finite vector element {x!r}: clean NaN/Inf embeddings "
-            "before deriving centroids/planes (they cannot be plan literals)"
-        )
-    return f"{x}D"
+    return f"{float(x)}D"
 
 
 def _expr_matrix(rows) -> Column:
@@ -241,135 +234,10 @@ def centroids(
     )
 
 
-def _literal_vec(values) -> Column:
-    """One array literal per vector: a single F.lit(list) py4j call.
-    Building it as 64 separate F.lit() elements put ~1300 driver py4j
-    round-trips into plan CONSTRUCTION for a 10-centroid quantizer —
-    measured 5.2 s of driver time before a single task ran."""
-    return _expr_vec(values)
-
-
-def ivf_probe(
-    vec: Column | str, centroid_rows: list[tuple[int, list[float]]], nprobe: int = 1
-) -> Column:
-    """Top-nprobe coarse-quantizer cells for a vector, computed as INLINE
-    array expressions over literal centroids — no join, no shuffle: the
-    IVF assignment is a pure projection over the scan, which is what
-    keeps index build map-only at corpus scale (centroids are tiny and
-    ship inside the plan like a broadcast). Ties break to the smaller
-    cell label (struct sort on (cos DESC, -label DESC)).
-    → array<int> of cell labels, best first.
-
-    Pass `vec` as a COLUMN NAME string to build the whole probe as ONE
-    SQL text parsed in a single F.expr call: the per-centroid Column
-    builder costs ~15 py4j round-trips and one 64-literal SQL parse per
-    centroid, ~1.2 s of driver time per query construction at K=10
-    (paid inside every timed bench rep). The parsed tree is
-    operator-identical, so values are bit-equal — asserted against the
-    Column path in tests. Column input keeps the old builder for
-    arbitrary expressions."""
-    if isinstance(vec, str):
-        return F.expr(_ivf_probe_sql(vec, centroid_rows, nprobe))
-    from informers_spark.functions.similarity import dot, l2_norm
-
-    # centroid norms are plan-time constants (python floats, not
-    # expression trees); the row-vector norm Column is built ONCE and
-    # the same py4j object reused across all K cosines — together with
-    # the list-literal centroids this keeps plan construction O(K)
-    # py4j calls instead of O(K * dim)
-    vec_norm = l2_norm(vec)
-    entries = []
-    for lbl, cv in centroid_rows:
-        c_norm = float(sum(float(x) * float(x) for x in cv) ** 0.5)
-        entries.append(
-            F.struct(
-                (dot(vec, _literal_vec(cv)) / (vec_norm * F.lit(c_norm))).alias("cos"),
-                F.lit(-int(lbl)).cast("int").alias("neg"),
-            )
-        )
-    top = F.slice(F.sort_array(F.array(*entries), asc=False), 1, nprobe)
-    return F.transform(top, lambda s: -s["neg"])
-
-
-def _ivf_probe_sql(
-    vec_sql: str, centroid_rows: list[tuple[int, list[float]]], nprobe: int
-) -> str:
-    """SQL text of the ivf_probe expression tree — operator-for-operator
-    the same shape the Column builder produces (same fold order, same
-    casts, same tie-break struct), parsed once."""
-    norm = (
-        f"sqrt(aggregate({vec_sql}, 0.0D, "
-        f"(acc, x) -> acc + cast(x as double) * cast(x as double)))"
-    )
-    terms = []
-    for lbl, cv in centroid_rows:
-        c_norm = float(sum(float(x) * float(x) for x in cv) ** 0.5)
-        arr = "array(" + ",".join(_d(x) for x in cv) + ")"
-        dot_sql = (
-            f"aggregate(zip_with({vec_sql}, {arr}, "
-            f"(v, p) -> cast(v as double) * cast(p as double)), 0.0D, (acc, x) -> acc + x)"
-        )
-        terms.append(
-            f"struct({dot_sql} / ({norm} * {_d(c_norm)}) as cos, "
-            f"cast({-int(lbl)} as int) as neg)"
-        )
-    return (
-        f"transform(slice(sort_array(array({','.join(terms)}), false), 1, {nprobe}), "
-        f"s -> -s.neg)"
-    )
-
-
-def knn_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroid_rows: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF-flat approximate top-k (the brief's named scale-path variant
-    next to banded LSH): corpus vectors live in ONE cell each (nearest
-    centroid); each query probes its nprobe nearest cells and scores
-    only those cells' members. Candidate generation is an equi-join on
-    the cell id — never a cross join — with the query side broadcast;
-    a (query, corpus) pair can collide in at most one cell, so no
-    distinct is needed before scoring. centroid_rows is the trained
-    coarse quantizer [(cell_label, centroid_vec)]; here the per-label
-    means (ann.centroids) stand in deterministically.
-
-    K-growth caveat: the inline-literal probe puts O(K·dim) literals
-    into EVERY stage's serialized plan — fine at K≲100, a multi-MB
-    plan (driver serialization + per-stage task broadcast) at the
-    K≈4√N≈65k a 100-TB IVF needs. Past that, use knn_ivf_df, which
-    ships the centroids as broadcast DATA instead of plan text while
-    keeping the assignment map-only.
-    → (query_id, neighbor_id, rank, cos_sim)."""
-    cents = sorted(centroid_rows)
-    c = spread_scan(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    ).withColumn("cell", ivf_probe("cv", cents, 1)[0])
-    q = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-        .withColumn("cell", F.explode(ivf_probe("qv", cents, nprobe)))
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
-    )
-
-
 def centroid_vectors(df: DataFrame) -> DataFrame:
     """Assemble the per-label mean centroids (ann.centroids long format)
     into a (label:int, vec:array<double>) DataFrame — the quantizer shape
-    knn_ivf_df broadcasts. Stays distributed: no collect."""
+    knn_ivf broadcasts. Stays distributed: no collect."""
     return (
         centroids(df)
         .groupBy("label")
@@ -380,8 +248,9 @@ def centroid_vectors(df: DataFrame) -> DataFrame:
 
 def _ivf_cells_from_packed(vec: Column, cents: Column, nprobe: int) -> Column:
     """Top-nprobe cell labels for `vec` against a packed
-    array<struct<label,vec>> centroid column (broadcast data, not plan
-    literals). Same tie-break as ivf_probe: (cos DESC, label ASC)."""
+    array<struct<label,vec>> centroid column. Ties break to the smaller
+    cell label (struct sort on (cos DESC, -label DESC)).
+    → array<int> of cell labels, best first."""
     scored = F.transform(
         cents,
         lambda s: F.struct(
@@ -393,7 +262,7 @@ def _ivf_cells_from_packed(vec: Column, cents: Column, nprobe: int) -> Column:
     return F.transform(top, lambda s: -s["neg"])
 
 
-def knn_ivf_df(
+def knn_ivf(
     corpus: DataFrame,
     queries: DataFrame,
     centroids_df: DataFrame,
@@ -402,15 +271,28 @@ def knn_ivf_df(
     k: int = 5,
     nprobe: int = 2,
 ) -> DataFrame:
-    """IVF-flat top-k with the coarse quantizer as a broadcast DataFrame —
-    the scale path once K grows past the inline-literal plan's comfort
-    zone (see knn_ivf). The centroid set is packed into ONE row holding
-    an array<struct<label,vec>> and attached to each side with a
-    broadcast nested-loop join (1-row inner side → exactly one output
-    row per input row, map-only: no shuffle of the corpus, no O(K·dim)
-    plan literals — centroids travel once per executor as broadcast
-    data). Cell assignment, candidate equi-join, and scoring are then
-    identical to knn_ivf; the two are equality-tested at K=10.
+    """IVF-flat approximate top-k (the brief's named scale-path variant
+    next to banded LSH): corpus vectors live in ONE cell each (nearest
+    centroid); each query probes its nprobe nearest cells and scores
+    only those cells' members. Candidate generation is an equi-join on
+    the cell id — never a cross join — with the query side broadcast;
+    a (query, corpus) pair can collide in at most one cell, so no
+    distinct is needed before scoring. `centroids_df` is the trained
+    coarse quantizer as (label:int, vec:array<double>) rows; here the
+    per-label means (centroid_vectors) stand in deterministically.
+
+    The centroid set is packed into ONE row holding an
+    array<struct<label,vec>> and attached to each side with a broadcast
+    nested-loop join (1-row inner side → exactly one output row per
+    input row): cell assignment stays map-only — no shuffle of the
+    corpus, no driver-side collect of the centroids, and no plan
+    literals, so the serialized plan does not grow with K.
+
+    K-growth caveat: the packed row is K·dim doubles shipped once per
+    executor, and every vector scores all K centroids — fine at K≲1e3,
+    but at the K≈4√N≈65k a 100-TB IVF needs that is a ~33 MB broadcast
+    row (dim=64) and O(K·dim) work per vector; past that, assign cells with a
+    two-level (coarse-of-coarse) quantizer instead.
     → (query_id, neighbor_id, rank, cos_sim)."""
     packed = F.broadcast(
         centroids_df.agg(
@@ -443,17 +325,3 @@ def knn_ivf_df(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
     )
-
-
-def centroid_rows_from_labels(df: DataFrame) -> list[tuple[int, list[float]]]:
-    """Collect the per-label mean centroids (ann.centroids) into the
-    [(label, vec)] quantizer shape — a K×dim driver-side list (tiny by
-    construction; K = coarse-cell count, not corpus size)."""
-    rows = (
-        centroids(df)
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "mean_val"))).alias("dv"))
-        .select("label", F.col("dv.mean_val").alias("vec"))
-        .collect()
-    )
-    return sorted((int(r.label), list(r.vec)) for r in rows)

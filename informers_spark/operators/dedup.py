@@ -8,7 +8,7 @@ uniform — safe at 100 TB with the bucket-size skew guard).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from informers_spark.functions.similarity import (
@@ -153,16 +153,15 @@ def simhash_neardup(
 ) -> DataFrame:
     """SimHash near-duplicate pairs via banded pigeonhole blocking:
     split the fingerprint into `bands` bit-slices; two hashes within
-    hamming distance < bands must agree on at least one slice, so the
-    candidate join is an equi-join on (band, slice) — never all-pairs.
-    Verified with the exact popcount(xor) distance ≤ max_hamming.
-    → (a, b, hamming). Same window-count bucket guard as the other
-    blocked dedups.
+    hamming distance < bands must agree on at least one slice, so pairs
+    are the hamming-verified (popcount(xor) ≤ max_hamming) collisions
+    of (band, slice) cells that survive the max_bucket cap — never
+    all-pairs. → (a, b, hamming). The pairs are enumerated over
+    DISTINCT hashes by _simhash_pairs_clustered.
 
-    Recall contract: EXACT for max_hamming <= bands - 1 (pigeonhole);
-    for larger thresholds candidates are only block-collision pairs
-    (LSH-style partial recall) — raise `bands` to max_hamming + 1 for
-    guaranteed recall at a wider radius. Default keeps the two
+    Recall contract: EXACT for max_hamming <= bands - 1 (pigeonhole).
+    A larger max_hamming raises ValueError — raise `bands` to at least
+    max_hamming + 1 for a wider radius. Default keeps the two
     consistent (3 = bands - 1)."""
     base = spread_scan(df).select(
         F.col(id_col).alias("id"), simhash(F.col(text_col), bits).alias("sh")
@@ -333,109 +332,25 @@ def simhash_pairs_from_hashes(
 ) -> DataFrame:
     """Pair enumeration over an (id, sh) table — simhash_neardup minus the
     fingerprint computation, factored out so tests can drive exact hash
-    values (the bucket-cap/first-band interaction below is unreachable at
-    fixture scale through real texts)."""
-    # materialize the (id, sh) fold ONCE: the two-phase guard's count
-    # branch, its anti-join side, and both self-join sides all consume it
-    # — without this the fingerprint computation re-runs per branch
-    # (measured 7.4s -> 0.6s for the guarded blocks at sf0.1). Two tiny
-    # columns; at cluster scale this is a warehouse-checkpoint stage.
+    values (the bucket-cap/first-band interaction is unreachable at
+    fixture scale through real texts). The result is the banded
+    contract — DISTINCT pairs sharing a SURVIVING (band, slice) cell,
+    hamming-verified — reproduced exactly by the cluster-level plan
+    (_simhash_pairs_clustered). That plan needs max_hamming <= bands - 1
+    (pigeonhole); wider radii raise instead of silently losing recall."""
+    if max_hamming > bands - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs bands >= {max_hamming + 1} "
+            f"(got bands={bands}): raise `bands` for exact recall at this radius"
+        )
+    # materialize the (id, sh) fold ONCE: the cell-size count, both
+    # candidate-join sides and the id expansion all consume it — without
+    # this the fingerprint computation re-runs per branch (measured
+    # 7.4s -> 0.6s at sf0.1). Two tiny columns; at cluster scale this is
+    # a warehouse-checkpoint stage.
     base = base.localCheckpoint()
     width = (bits + bands - 1) // bands
-    if max_hamming <= bands - 1:
-        # exact-recall regime: the banded candidate set (pairs sharing a
-        # SURVIVING band cell, hamming-verified) is reproduced exactly by
-        # the cluster-level plan — see _simhash_pairs_clustered. Only the
-        # partial-recall regime (max_hamming > bands-1, where the result
-        # is DEFINED as band-collision pairs) still needs the banded
-        # self-join below.
-        return _simhash_pairs_clustered(base, max_hamming, bits, bands, width, max_bucket)
-    keys = F.array(
-        *[
-            F.struct(
-                F.lit(i).cast("int").alias("band"),
-                F.shiftright(F.col("sh"), i * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("key"),
-            )
-            for i in range(bands)
-        ]
-    )
-    blocks = base.select("id", "sh", F.explode(keys).alias("bk")).select(
-        "id", "sh", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    # two-phase skew guard (see drop_oversized_buckets), with a bounded
-    # driver-side probe on the over-limit key set: limit(1).count() on a
-    # map-side-aggregated groupBy (the canon.py class of documented
-    # probes). In the COMMON case no cell is capped and the retained-band
-    # bitmask below is a constant — skipping its id-keyed window shuffle
-    # (measured ~2s of the 4.4s query at sf0.1).
-    over = (
-        blocks.groupBy("band", "key")
-        .agg(F.count("*").alias("_bn"))
-        .filter(F.col("_bn") > max_bucket)
-        .select("band", "key")
-    )
-    if over.limit(1).count() == 0:
-        # nothing capped: every band retained for every id
-        blocks = blocks.withColumn("rb", F.lit(-1).cast("long")).localCheckpoint()
-    else:
-        # retained-band bitmask per id: bit i set iff this id's band-i
-        # block SURVIVED the bucket cap. Needed by the first-matching-band
-        # filter below — without it, a pair whose earliest matching band
-        # was capped would be rejected in every surviving band too and
-        # silently lost (the guard's own skew scenario). One id-keyed
-        # window shuffle (high-cardinality uniform key); checkpointed
-        # since the blocks feed BOTH self-join sides.
-        blocks = (
-            blocks.join(F.broadcast(over), ["band", "key"], "left_anti")
-            .withColumn(
-                "rb", F.sum(F.expr("shiftleft(1L, band)")).over(Window.partitionBy("id"))
-            )
-            .localCheckpoint()
-        )
-    # Salted self-join: a dense cluster puts its whole C(n,2) pair
-    # enumeration in ONE (band, key) task; salting the left side by id
-    # and replicating the right across the salt space spreads the same
-    # exact pair set over n_salt tasks (pair (a,b) is produced exactly
-    # once, under a's salt). Corpora with heavy template reuse hit this
-    # hard — measured 23s -> ~3s for the candidate join at sf0.1.
-    n_salt = 16
-    a = blocks.withColumn("_s", F.pmod(F.xxhash64("id"), F.lit(n_salt)))
-    b = blocks.withColumn(
-        "_s", F.explode(F.array(*[F.lit(i).cast("long") for i in range(n_salt)]))
-    )
-    # first-matching-band dedup: a pair that collides in k surviving bands
-    # would be enumerated k times; instead of a distinct() (a full shuffle
-    # of the pair set), emit the pair ONLY in its smallest SURVIVING
-    # matching band. Both fingerprints are in hand post-join, so slice
-    # equality is bit arithmetic; survival of an earlier band i is bit i
-    # of the retained-band mask (when the slices match, both ids sit in
-    # the SAME (i, key) cell, so checking one side's mask suffices).
-    # Exactly-once per pair, no shuffle.
-    def slice_eq(col_a, col_b, i):
-        mask = F.lit((1 << width) - 1)
-        return (
-            F.shiftright(col_a, i * width).bitwiseAND(mask)
-            == F.shiftright(col_b, i * width).bitwiseAND(mask)
-        )
-
-    no_earlier = F.lit(True)
-    for i in range(bands - 1):
-        earlier_match = slice_eq(F.col("a.sh"), F.col("b.sh"), i) & (
-            F.col("a.rb").bitwiseAND(F.lit(1 << i)) != F.lit(0)
-        )
-        no_earlier = no_earlier & ((F.col("band") <= F.lit(i)) | ~earlier_match)
-    return (
-        a.alias("a").join(b.alias("b"), ["band", "key", "_s"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .filter(no_earlier)
-        .select(
-            F.col("a.id").alias("a"), F.col("b.id").alias("b"),
-            hamming_distance(F.col("a.sh"), F.col("b.sh"), bits).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _simhash_pairs_clustered(base, max_hamming, bits, bands, width, max_bucket)
 
 
 def fingerprint_table(
@@ -497,8 +412,8 @@ def dedup_corpus(
     operator: simhash_neardup pairs → connected components over the pair
     graph → keep exactly one representative (the min id) per duplicate
     cluster, drop the rest. → the deduplicated corpus (all original
-    columns). Every stage is the already-skew-guarded operator: banded
-    blocking, salted self-join, size-tiered components; the final drop
+    columns). Every stage is the already-skew-guarded operator: the
+    distinct-hash SimHash pair plan, size-tiered components; the final drop
     is a left_anti join on ids only (the corpus content never reshuffles)."""
     from informers_spark.operators.canon import connected_components
 

@@ -32,7 +32,7 @@ Scale shape (the part that must survive 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -76,80 +76,12 @@ def pagerank(
     (edges, weights, iterations, damping) — which is what lets the
     correctness gate unroll the exact same recurrence in SQL.
 
-    Per iteration: one shuffle joining ranks onto the (src, dst, w, od)
-    edge table by src, one map-side-combined groupBy(dst), one broadcast
-    of the 1-row dangling aggregate, then localCheckpoint to pin the
-    iterate and cut lineage. Setup is ONE dual-explode aggregation
-    (node universe + out-weights + dangling flags in a single shuffle,
-    instead of a union-distinct plus a separate out-degree groupBy —
-    the r5 form spent as long in setup as in all five iterations), and
-    the dangling flag rides the rank table so the per-iteration
-    dangling mass is a filter + 1-row aggregate, not an anti-join.
-    Out-weights are joined onto edges ONCE before the loop. The dangling
-    zero-padding (dst occurrences contribute +0.0 to the out-weight
-    sum) is exact in IEEE arithmetic, so od values are unchanged."""
-    w_col = (
-        F.col(weight).cast("double") if weight is not None else F.lit(1.0)
-    )
-    both = F.array(
-        F.struct(F.col(src).alias("node"), w_col.alias("w")),
-        F.struct(F.col(dst).alias("node"), F.lit(0.0).alias("w")),
-    )
-    nodes_f = (
-        edges.select(F.explode(both).alias("e"))
-        .groupBy(F.col("e.node").alias("node"))
-        .agg(F.sum("e.w").alias("od"))
-        .select("node", "od", (F.col("od") > 0).alias("has_out"))
-        .localCheckpoint()
-    )
-    n = nodes_f.count()  # single scalar; the formula needs N on both sides
-    if n == 0:
-        return nodes_f.select("node").withColumn("rank", F.lit(0.0))
-    teleport = (1.0 - damping) / n
-
-    edges_w = (
-        edges.select(
-            F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), w_col.alias("e_w")
-        )
-        .join(nodes_f.filter("has_out").select("node", "od"), F.col("e_src") == F.col("node"))
-        .select("e_src", "e_dst", "e_w", "od")
-        .localCheckpoint()  # scanned every iteration
-    )
-
-    ranks = nodes_f.select("node", "has_out").withColumn(
-        "rank", F.lit(1.0 / n)
-    ).localCheckpoint()
-    for _ in range(iterations):
-        contrib = (
-            edges_w.join(ranks, F.col("e_src") == F.col("node"))
-            .groupBy(F.col("e_dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("e_w") / F.col("od")).alias("contrib"))
-        )
-        # rank mass on dangling nodes (no out-edges): 1-row aggregate,
-        # broadcast onto every node — never a driver round-trip inside
-        # the loop's plan
-        dangling = ranks.filter(~F.col("has_out")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
-        )
-        ranks = (
-            nodes_f.select("node", "has_out")
-            .join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "has_out",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.col("mass") / F.lit(float(n)))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
+    Plan shape (shared with personalized_pagerank): see _power_iterate."""
+    ranks, n = _power_iterate(edges, src, dst, weight, iterations, damping)
     if metrics is not None:
         metrics["iterations"] = iterations
         metrics["n_nodes"] = n
-    return ranks.select("node", "rank")
+    return ranks
 
 
 def personalized_pagerank(
@@ -173,74 +105,126 @@ def personalized_pagerank(
     returns to the seeds (the standard PPR treatment — total mass stays
     1, and nodes unreachable from the seeds stay at exactly 0). The node
     universe is edge endpoints ∪ seeds, so an isolated seed keeps its
-    teleport share instead of leaking it. Same per-iteration plan shape
-    as `pagerank`; the seed indicator is joined onto the node table ONCE
-    before the loop."""
+    teleport share instead of leaking it. Same set-up and per-iteration
+    plan as `pagerank` (one shared core); the seed indicator is joined
+    onto the node table ONCE before the loop."""
     seed_nodes = (
         seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().localCheckpoint()
     )
     n_seeds = seed_nodes.count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
-    sv = 1.0 / n_seeds
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionAll(edges.select(F.col(dst).alias("node")))
-        .unionAll(seed_nodes.select("node"))
-        .distinct()
+    ranks, _ = _power_iterate(
+        edges, src, dst, weight, iterations, damping,
+        seeds=seed_nodes.withColumn("sv", F.lit(1.0 / n_seeds)),
     )
-    nodes_s = (
-        nodes.join(seed_nodes.withColumn("is_seed", F.lit(True)), "node", "left")
-        .select(
-            "node",
-            F.when(F.col("is_seed"), F.lit(sv)).otherwise(F.lit(0.0)).alias("sv"),
-        )
+    if metrics is not None:
+        metrics["iterations"] = iterations
+        metrics["n_seeds"] = n_seeds
+    return ranks
+
+
+def _power_iterate(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    weight: str | None,
+    iterations: int,
+    damping: float,
+    seeds: DataFrame | None = None,
+) -> tuple[DataFrame, int]:
+    """The power-method core shared by `pagerank` (seeds=None: uniform
+    teleport 1/N, r_0 = 1/N) and `personalized_pagerank` (seeds: a
+    distinct (node, sv) table — teleport and r_0 are the seed vector s,
+    and the seeds join the node universe). → ((node, rank), N).
+
+    Per iteration: one shuffle joining ranks onto the (src, dst, w, od)
+    edge table by src, one map-side-combined groupBy(dst), one broadcast
+    of the 1-row dangling aggregate, then localCheckpoint to pin the
+    iterate and cut lineage. Setup is ONE dual-explode aggregation
+    (node universe + out-weights + dangling flags in a single shuffle,
+    instead of a union-distinct plus a separate out-degree groupBy —
+    the r5 form spent as long in setup as in all five iterations), and
+    the dangling flag rides the rank table so the per-iteration
+    dangling mass is a filter + 1-row aggregate, not an anti-join.
+    Out-weights are joined onto edges ONCE before the loop. The dangling
+    zero-padding (dst and seed occurrences contribute +0.0 to the
+    out-weight sum) is exact in IEEE arithmetic, so od values are
+    unchanged. Each variant keeps its own float update expression: the
+    SQL oracles unroll exactly those literals."""
+    w_col = (
+        F.col(weight).cast("double") if weight is not None else F.lit(1.0)
+    )
+    both = F.array(
+        F.struct(F.col(src).alias("node"), w_col.alias("w")),
+        F.struct(F.col(dst).alias("node"), F.lit(0.0).alias("w")),
+    )
+    ends = edges.select(F.explode(both).alias("e")).select("e.node", "e.w")
+    if seeds is not None:
+        ends = ends.unionAll(seeds.select("node", F.lit(0.0).alias("w")))
+    nodes_f = (
+        ends.groupBy("node")
+        .agg(F.sum("w").alias("od"))
+        .select("node", "od", (F.col("od") > 0).alias("has_out"))
         .localCheckpoint()
     )
+    n = nodes_f.count()  # single scalar; the formula needs N on both sides
+    if n == 0:
+        return nodes_f.select("node").withColumn("rank", F.lit(0.0)), 0
 
-    w_col = F.col(weight).cast("double") if weight is not None else F.lit(1.0)
-    out_deg = (
-        edges.select(F.col(src).alias("node"), w_col.alias("w"))
-        .groupBy("node")
-        .agg(F.sum("w").alias("od"))
-    )
+    if seeds is None:
+        teleport = (1.0 - damping) / n
+        base = nodes_f.select("node", "has_out")
+        r0 = F.lit(1.0 / n)
+
+        def step(contrib: Column, mass: Column) -> Column:
+            return F.lit(teleport) + F.lit(damping) * (contrib + mass / F.lit(float(n)))
+
+    else:
+        base = (
+            nodes_f.join(seeds, "node", "left")
+            .select("node", "has_out", F.coalesce("sv", F.lit(0.0)).alias("sv"))
+            .localCheckpoint()
+        )
+        r0 = F.col("sv")
+
+        def step(contrib: Column, mass: Column) -> Column:
+            return F.lit(1.0 - damping) * F.col("sv") + F.lit(damping) * (
+                contrib + mass * F.col("sv")
+            )
+
     edges_w = (
         edges.select(
             F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), w_col.alias("e_w")
         )
-        .join(out_deg, F.col("e_src") == F.col("node"))
+        .join(nodes_f.filter("has_out").select("node", "od"), F.col("e_src") == F.col("node"))
         .select("e_src", "e_dst", "e_w", "od")
-        .localCheckpoint()
+        .localCheckpoint()  # scanned every iteration
     )
 
-    ranks = nodes_s.select("node", F.col("sv").alias("rank")).localCheckpoint()
+    ranks = base.withColumn("rank", r0).localCheckpoint()
     for _ in range(iterations):
         contrib = (
             edges_w.join(ranks, F.col("e_src") == F.col("node"))
             .groupBy(F.col("e_dst").alias("node"))
             .agg(F.sum(F.col("rank") * F.col("e_w") / F.col("od")).alias("contrib"))
         )
-        dangling = (
-            ranks.join(out_deg.select("node"), "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass"))
+        # rank mass on dangling nodes (no out-edges): 1-row aggregate,
+        # broadcast onto every node — never a driver round-trip inside
+        # the loop's plan
+        dangling = ranks.filter(~F.col("has_out")).agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
         )
         ranks = (
-            nodes_s.join(contrib, "node", "left")
+            base.join(contrib, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("sv")
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.col("mass") * F.col("sv"))
-                ).alias("rank"),
+                *base.columns,
+                step(F.coalesce("contrib", F.lit(0.0)), F.col("mass")).alias("rank"),
             )
             .localCheckpoint()
         )
-    if metrics is not None:
-        metrics["iterations"] = iterations
-        metrics["n_seeds"] = n_seeds
-    return ranks
+    return ranks.select("node", "rank"), n
 
 
 def personalized_pagerank_oracle_sql(

@@ -239,20 +239,22 @@ def test_label_propagation_deterministic_across_partitionings(spark):
     assert a == b
 
 
-def _ppr_reference(pairs, seeds, iterations, damping):
-    """Independent dense personalized power iteration."""
+def _ppr_reference(pairs, seeds, iterations, damping, weights=None):
+    """Independent dense personalized power iteration; `weights` aligns
+    with `pairs` (None = unweighted)."""
+    ws = weights or [1.0] * len(pairs)
     nodes = sorted({n for p in pairs for n in p} | set(seeds))
     idx = {n: i for i, n in enumerate(nodes)}
     n = len(nodes)
-    out = [0] * n
-    for s, _ in pairs:
-        out[idx[s]] += 1
+    out = [0.0] * n
+    for (s, _), w in zip(pairs, ws):
+        out[idx[s]] += w
     sv = [1.0 / len(set(seeds)) if x in set(seeds) else 0.0 for x in nodes]
     rank = list(sv)
     for _ in range(iterations):
         contrib = [0.0] * n
-        for s, d in pairs:
-            contrib[idx[d]] += rank[idx[s]] / out[idx[s]]
+        for (s, d), w in zip(pairs, ws):
+            contrib[idx[d]] += rank[idx[s]] * w / out[idx[s]]
         dangling = sum(r for i, r in enumerate(rank) if out[i] == 0)
         rank = [
             (1.0 - damping) * sv[i] + damping * (contrib[i] + dangling * sv[i])
@@ -283,6 +285,25 @@ def test_personalized_pagerank_matches_dense_reference(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
     assert got["x"] == 0.0 and got["y"] == 0.0
     assert got["s2"] > 0  # isolated seed keeps its teleport share
+
+    # weighted walk: a's two out-edges split its rank 3:1 by weight
+    wpairs = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("x", "y")]
+    weights = [3.0, 1.0, 2.0, 0.5, 4.0]
+    we = spark.createDataFrame(
+        [(s, d, w) for (s, d), w in zip(wpairs, weights)],
+        "src string, dst string, weight double",
+    )
+    got_w = {
+        r.node: r.rank
+        for r in personalized_pagerank(we, seeds, iterations=4, weight="weight").collect()
+    }
+    want_w = _ppr_reference(wpairs, ["a", "s2"], 4, 0.85, weights=weights)
+    assert set(got_w) == set(want_w)
+    for node in want_w:
+        assert got_w[node] == pytest.approx(want_w[node], abs=1e-12)
+    # the weights matter: the unweighted walk ranks b and c differently
+    unweighted = _ppr_reference(wpairs, ["a", "s2"], 4, 0.85)
+    assert got_w["b"] != pytest.approx(unweighted["b"], abs=1e-6)
 
 
 def test_personalized_pagerank_empty_seeds_raises(spark):

@@ -152,41 +152,6 @@ def test_knn_lsh_recall_vs_bruteforce(spark):
     assert r16 >= r8 > r1  # more tables -> more recall
 
 
-def test_knn_ivf_df_equals_inline_literal_variant(spark):
-    """knn_ivf_df (centroids as broadcast DATA — the K-growth scale path)
-    must return exactly what knn_ivf (centroids as plan literals) returns
-    for the same quantizer, including tie-breaks."""
-    from informers_spark.operators import ann
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    rows = ann.centroid_rows_from_labels(emb)
-    cents_df = ann.centroid_vectors(emb)
-    lit_out = {
-        tuple(r) for r in ann.knn_ivf(emb, q, rows, k=5, nprobe=2).collect()
-    }
-    df_out = {
-        tuple(r) for r in ann.knn_ivf_df(emb, q, cents_df, k=5, nprobe=2).collect()
-    }
-    assert df_out == lit_out and len(df_out) == 50
-
-
-def test_knn_ivf_df_assignment_is_map_only(spark):
-    # the packed-centroid attach must be a broadcast nested-loop join
-    # (1-row side) with NO exchange between the corpus scan and the cell
-    # equi-join — same map-only property the literal plan has
-    from informers_spark.operators import ann
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    plan = ann.knn_ivf_df(emb, q, ann.centroid_vectors(emb), k=5, nprobe=2)._sc._jvm.PythonSQLUtils.explainString(
-        ann.knn_ivf_df(emb, q, ann.centroid_vectors(emb), k=5, nprobe=2)._jdf.queryExecution(), "formatted"
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan  # the 1-row centroid attach
-    assert "BroadcastHashJoin" in plan  # the cell equi-join, query side broadcast
-
-
 def test_embedding_neardup_guard_caps_buckets(spark):
     """The max_bucket window guard must bound candidate pairs even when
     every vector lands in one cell (all-identical vectors = the dense
@@ -259,16 +224,28 @@ def test_simhash_pair_survives_when_first_matching_band_is_capped(spark):
 
 def test_simhash_pairs_match_distinct_reference_under_capping(spark):
     """Exactly-once pair emission == DISTINCT-over-surviving-bands for
-    pseudo-random hashes with an aggressive cap (many cells capped)."""
+    pseudo-random hashes under bucket caps (two caps, see below), at
+    a wide radius (bands=7 keeps max_hamming=6 in the exact regime); a
+    radius past bands-1 is refused."""
     from informers_spark.operators.dedup import simhash_pairs_from_hashes
 
     hashes = {i: (i * 2654435761) % (1 << 31) | (i % 16) for i in range(400)}
     df = spark.createDataFrame(list(hashes.items()), "id long, sh long")
-    got = {
-        (r.a, r.b, r.hamming)
-        for r in simhash_pairs_from_hashes(df, max_hamming=6, max_bucket=20).collect()
-    }
-    assert got == _ref_simhash_pairs(hashes, max_hamming=6, max_bucket=20)
+    uncapped = _ref_simhash_pairs(hashes, max_hamming=6, bands=7)
+    # max_bucket=20 caps two cells whose pairs survive in other bands;
+    # max_bucket=12 caps enough cells to lose most pairs
+    for cap in (20, 12):
+        got = {
+            (r.a, r.b, r.hamming)
+            for r in simhash_pairs_from_hashes(
+                df, max_hamming=6, bands=7, max_bucket=cap
+            ).collect()
+        }
+        want = _ref_simhash_pairs(hashes, max_hamming=6, bands=7, max_bucket=cap)
+        assert want and got == want
+    assert len(want) < len(uncapped)
+    with pytest.raises(ValueError, match="bands"):
+        simhash_pairs_from_hashes(df, max_hamming=6, bands=4, max_bucket=20)
 
 
 def test_simhash_pairs_exact_fastpath_matches_bruteforce(spark):
@@ -383,7 +360,7 @@ def test_knn_ivf_recall_and_probe_monotonicity(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 10)
-    cents = ann.centroid_rows_from_labels(emb)
+    cents = ann.centroid_vectors(emb).localCheckpoint()
     bf = {(r.query_id, r.neighbor_id) for r in ann.knn_bruteforce(emb, q, k=5).collect()}
 
     def recall(nprobe):
@@ -393,44 +370,27 @@ def test_knn_ivf_recall_and_probe_monotonicity(spark):
         }
         return len(bf & got) / len(bf)
 
-    r1, r2, rall = recall(1), recall(2), recall(len(cents))
+    r1, r2, rall = recall(1), recall(2), recall(cents.count())
     assert r1 <= r2 <= rall
     assert r2 >= 0.3  # near-random sandbox vectors: cells are weak but real
     assert rall == 1.0  # probing every cell == exact
 
 
-def test_ivf_probe_tie_breaks_to_smaller_label(spark):
+def test_ivf_cells_tie_break_to_smaller_label(spark):
     from pyspark.sql import functions as F
 
     from informers_spark.operators import ann
 
-    # two identical centroids -> equal cosines; the smaller label wins
-    cents = [(3, [1.0] * 4), (7, [1.0] * 4)]
+    # two identical centroids -> equal cosines; the smaller label wins,
+    # whatever order the packed centroid array holds them in
     df = spark.createDataFrame([([1.0, 1.0, 1.0, 1.0],)], ["v"])
-    row = df.select(ann.ivf_probe(F.col("v"), cents, 2).alias("p")).collect()[0]
-    assert row.p == [3, 7]
-    # the single-parse SQL fast path (column-name input) is value-equal
-    row = df.select(ann.ivf_probe("v", cents, 2).alias("p")).collect()[0]
-    assert row.p == [3, 7]
-
-
-def test_ivf_probe_sql_path_matches_column_path(spark):
-    """The one-F.expr probe (r6: column-name input) must reproduce the
-    Column-builder probe's cells exactly on non-trivial vectors."""
-    from pyspark.sql import functions as F
-
-    from informers_spark.operators import ann
-
-    dim = 16
-    cents = [
-        (lbl, [((lbl * 13 + j * 7) % 11) - 5.0 + 0.25 * j for j in range(dim)])
-        for lbl in range(6)
-    ]
-    rows = [([float(((i * 31 + j * 3) % 17) - 8) for j in range(dim)],) for i in range(40)]
-    df = spark.createDataFrame(rows, ["v"])
-    a = [r.p for r in df.select(ann.ivf_probe(F.col("v"), cents, 3).alias("p")).collect()]
-    b = [r.p for r in df.select(ann.ivf_probe("v", cents, 3).alias("p")).collect()]
-    assert a == b
+    for labels in ([3, 7], [7, 3]):
+        cents = F.array(
+            *[F.struct(F.lit(lbl).alias("label"), F.array(*[F.lit(1.0)] * 4).alias("vec"))
+              for lbl in labels]
+        )
+        row = df.select(ann._ivf_cells_from_packed(F.col("v"), cents, 2).alias("p")).collect()[0]
+        assert row.p == [3, 7]
 
 
 def test_dedup_corpus_keeps_one_per_cluster(spark):

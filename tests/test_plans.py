@@ -5,6 +5,7 @@ under-partitioned scan, nothing more). These guard the 100-TB posture —
 a plan that silently loses pushdown or broadcast still passes row-count
 tests but dies at scale."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -170,15 +171,18 @@ def test_vision_query_prunes_scan_and_avoids_exchange(spark):
     assert len(args) == 1 and "RoundRobinPartitioning" in args[0]
 
 
-def test_knn_ivf_assignment_is_map_only_and_broadcasts_queries(spark):
-    # IVF cell assignment must be a pure projection over the corpus scan
-    # (inline literal centroids — no join/exchange between scan and the
-    # cell equi-join), and the probe side must broadcast
-    from informers_spark.queries import q_knn_ivf
+@pytest.mark.parametrize("query", ["q_knn_ivf", "q_knn_ivf_df"])
+def test_knn_ivf_assignment_is_map_only_and_broadcasts_queries(spark, query):
+    # IVF cell assignment must be map-only over the corpus scan: the
+    # packed centroid row attaches through a 1-row broadcast nested-loop
+    # join (never a cartesian product or an exchange between scan and
+    # the cell equi-join), and the probe side must broadcast
+    from informers_spark.queries import QUERIES
 
-    plan = _plan(q_knn_ivf(spark, SF))
+    plan = _plan(QUERIES[query](spark, SF))
     assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoopJoin" in plan  # the 1-row centroid attach
+    assert "BroadcastHashJoin" in plan  # the cell equi-join, query side broadcast
     # exactly the joins we expect: cell equi-join (broadcast); no
     # shuffle join anywhere in candidate generation
     assert "SortMergeJoin" not in plan.split("BroadcastHashJoin")[0]
