@@ -138,17 +138,26 @@ def minhash_signature(fps: Column, k: int = 16, seed: int = 7) -> Column:
 
 
 def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """array<struct<band:int, key:array<long>>> — LSH band keys for bucket
-    joins. The key is the band's signature slice itself: equality on the
-    raw mins partitions docs exactly like the old "_"-joined string key
-    (both injective), but skips per-row string building and joins/groups
-    on 16 bytes of longs instead of a ~25-char string."""
-    return F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.slice(sig, b * rows_per_band + 1, rows_per_band).alias("key"),
+    """array<struct<band:int, key:bigint>> — LSH band keys for bucket
+    joins: the band's mins packed as (m1 << 31) | m2. Every min is at most
+    FP_MOD = 2^31-1 (the empty-input sentinel included), so the packing is
+    injective — cells are exactly the raw-slice cells — and the guard's
+    aggregate and the self-join hash a fixed-width 8-byte key. A bigint
+    holds two 31-bit mins, so rows_per_band > 2 raises."""
+    if rows_per_band > 2:
+        raise ValueError(
+            f"rows_per_band={rows_per_band}: a bigint band key packs at most "
+            "2 mins; use more bands or fewer signature rows"
         )
-        for b in range(bands)
+
+    def key(b: int) -> Column:
+        out = F.get(sig, b * rows_per_band)
+        for r in range(1, rows_per_band):
+            out = F.shiftleft(out, 31).bitwiseOR(F.get(sig, b * rows_per_band + r))
+        return out
+
+    return F.array(*[
+        F.struct(F.lit(b).alias("band"), key(b).alias("key")) for b in range(bands)
     ])
 
 

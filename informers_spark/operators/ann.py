@@ -102,8 +102,8 @@ def banded_buckets(
     [t·r, (t+1)·r) — OR-amplification, so near-neighbors that disagree on
     one plane of one table still collide in another. Band 0 with r=8 is
     bit-identical to hyperplane_bucket(vec, 8) (same global plane weights).
-    → array<struct<band:int, bucket:bigint>>; explode to block on
-    (band, bucket).
+    → array<struct<band:int, key:bigint>>; explode to block on
+    (band, key).
 
     Construction shape: the whole plane matrix ships as ONE nested array
     literal and the per-plane dots/sign bits are built with transform/
@@ -138,7 +138,7 @@ def banded_buckets(
                 ),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
-            ).alias("bucket"),
+            ).alias("key"),
         )
         for t in range(bands)
     ]
@@ -152,33 +152,26 @@ def _banded_blocks(
     out_id: str,
     bands: int,
     planes_per_band: int,
-    max_bucket: int | None,
+    spread: bool,
 ) -> DataFrame:
-    """(id, band, bucket) blocking table with the two-phase skew guard:
-    any (band, bucket) cell above max_bucket is dropped BEFORE any
-    self-join touches it — a dense embedding region can never go quadratic
-    (the same groupBy-count → broadcast-anti-join guard minhash_pairs
-    uses; see dedup.drop_oversized_buckets for why not a window count)."""
-    from informers_spark.operators.dedup import drop_oversized_buckets
+    """(id, band, key) banded blocking table, unguarded: the caller caps
+    hot cells (dedup._banded_self_join for a self-join, knn_lsh's
+    drop_oversized_buckets on its corpus side).
 
-    if max_bucket:
-        # corpus/self-join side: the banded-bucket expressions are the
-        # heavy part — spread a coarse scan so they use every core (the
-        # broadcast query side passes max_bucket=None and stays put)
+    spread=True is the corpus side: the banded-bucket expressions are the
+    heavy part, so a coarse scan is spread to every core, and the table
+    is materialized ONCE — the guard's count branch, its anti-join side
+    and the downstream join side(s) all consume it; without a checkpoint
+    the bands×planes aggregate expressions re-run per branch (measured 4x
+    on the embedding_neardup self-join). Three small columns. The
+    broadcast query side passes spread=False and stays put."""
+    if spread:
         df = spread_scan(df)
     blocks = df.select(
         F.col(id_col).alias(out_id),
         F.explode(banded_buckets(F.col(vec_col), bands, planes_per_band)).alias("bk"),
-    ).select(out_id, F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"))
-    if max_bucket:
-        # materialize the bucket computation ONCE: the guard's count
-        # branch, its anti-join side, and the downstream join side(s) all
-        # consume this table — without a checkpoint the bands×planes
-        # aggregate expressions re-run per branch (measured 4x on the
-        # embedding_neardup self-join). Three small columns.
-        blocks = blocks.localCheckpoint()
-        blocks = drop_oversized_buckets(blocks, ["band", "bucket"], max_bucket)
-    return blocks
+    ).select(out_id, "bk.band", "bk.key")
+    return blocks.localCheckpoint() if spread else blocks
 
 
 def knn_lsh(
@@ -193,13 +186,18 @@ def knn_lsh(
 ) -> DataFrame:
     """Approximate top-k with banded (multi-probe) LSH: candidates =
     corpus rows sharing ANY band's bucket with the query (equi-join on
-    (band, bucket), never a cross join), deduped, then cosine-scored.
+    (band, key), never a cross join), deduped, then cosine-scored.
     OR-amplification over `bands` tables fixes the single-table recall
-    collapse; max_bucket caps any hot cell before the join."""
-    c = _banded_blocks(corpus, id_col, vec_col, "neighbor_id", bands, planes_per_band, max_bucket)
-    q = _banded_blocks(queries, id_col, vec_col, "query_id", bands, planes_per_band, None)
+    collapse. This is a broadcast probe, not a self-join, so max_bucket
+    caps hot corpus cells with drop_oversized_buckets directly."""
+    from informers_spark.operators.dedup import drop_oversized_buckets
+
+    c = _banded_blocks(corpus, id_col, vec_col, "neighbor_id", bands, planes_per_band, spread=True)
+    if max_bucket:
+        c = drop_oversized_buckets(c, ["band", "key"], max_bucket)
+    q = _banded_blocks(queries, id_col, vec_col, "query_id", bands, planes_per_band, spread=False)
     cand = (
-        c.join(F.broadcast(q), ["band", "bucket"])
+        c.join(F.broadcast(q), ["band", "key"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()

@@ -53,6 +53,22 @@ def drop_oversized_buckets(
     return blocks.join(F.broadcast(over), key_cols, "left_anti")
 
 
+def _banded_self_join(blocks: DataFrame, max_bucket: int) -> DataFrame:
+    """The one LSH banded self-join: an (id, band, key) blocking table →
+    DISTINCT (a, b) id pairs with a < b that share a (band, key) cell of
+    at most max_bucket members. Cells over the cap are dropped by
+    drop_oversized_buckets BEFORE the equi-join, so no caller can skip
+    the skew guard or use a different one."""
+    blocks = drop_oversized_buckets(blocks, ["band", "key"], max_bucket)
+    a, b = blocks.alias("a"), blocks.alias("b")
+    return (
+        a.join(b, ["band", "key"])
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
+        .distinct()
+    )
+
+
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -88,9 +104,8 @@ def minhash_pairs(
     one fold step per character).
 
     Plan shape: one scan computes signature+shingles, explode to (band,
-    key), bucket self-join (equi-join — NOT a cross join), exact-Jaccard
-    verify on the joined shingle sets. The max_bucket guard caps any
-    band bucket before the self-join (quadratic blowup protection).
+    key), _banded_self_join (guarded equi-join — NOT a cross join),
+    exact-Jaccard verify on the joined shingle sets.
     """
     # materialize the shingle/signature computation ONCE: the skew-guard
     # aggregate, both self-join sides, and both fps re-attach joins all
@@ -112,16 +127,8 @@ def minhash_pairs(
     # instead of 8x array duplication through the shuffle)
     banded = base.select(
         "id", F.explode(minhash_bands(F.col("sig"), bands, k // bands)).alias("bk")
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-    banded = drop_oversized_buckets(banded, ["band", "key"], max_bucket)
-    a, b = banded.alias("a"), banded.alias("b")
-    id_pairs = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
-        .distinct()
-    )
+    ).select("id", "bk.band", "bk.key")
+    id_pairs = _banded_self_join(banded, max_bucket)
     fps = base.select("id", "fps")
     pairs = (
         id_pairs.join(fps.select(F.col("id").alias("a"), F.col("fps").alias("fa")), "a")
@@ -376,21 +383,15 @@ def embedding_neardup(
     OR-amplified — a near-pair that differs on one plane sign in one
     table still collides in another). → (a, b, cos_sim).
 
-    Scale shape: the self-join is an equi-join on (band, bucket); the
-    window-count guard drops any cell above max_bucket BEFORE the join,
-    so a dense embedding region (the 100-TB failure mode of single-table
-    LSH) can never go quadratic. Vectors are re-attached to the deduped
-    id pairs, so the blocking shuffle carries only (id, band, bucket)."""
+    Scale shape: _banded_self_join equi-joins on (band, key) after
+    drop_oversized_buckets drops any cell above max_bucket, so a dense
+    embedding region (the 100-TB failure mode of single-table LSH) can
+    never go quadratic. Vectors are re-attached to the deduped id pairs,
+    so the blocking shuffle carries only (id, band, key)."""
     from informers_spark.operators.ann import _banded_blocks
 
-    blocks = _banded_blocks(df, id_col, vec_col, "id", bands, planes_per_band, max_bucket)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    id_pairs = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
-        .distinct()
-    )
+    blocks = _banded_blocks(df, id_col, vec_col, "id", bands, planes_per_band, spread=True)
+    id_pairs = _banded_self_join(blocks, max_bucket)
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     return (
         id_pairs.join(vecs.select(F.col("id").alias("a"), F.col("v").alias("va")), "a")

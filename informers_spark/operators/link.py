@@ -10,9 +10,11 @@ forms (mean-pooled transformer outputs, reference pipeline semantics via
 informers_spark.pipelines.embed) ∧ threshold → same_as edges; per-surface
 best match kept with a window.
 
-Skew guard: band buckets larger than `max_bucket` are dropped (a band key
-shared by millions of surfaces generates a quadratic pair explosion —
-standard LSH practice; those pairs are re-findable with more bands).
+Skew guard: the LSH tier pairs through dedup._banded_self_join, the one
+guarded self-join the near-dup operators share, which drops (band, key)
+cells larger than `max_bucket` before joining — a band key shared by
+millions of surfaces would generate a quadratic pair explosion (standard
+LSH practice; those pairs are re-findable with more bands).
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from informers_spark.functions.similarity import (
     minhash_bands,
     minhash_signature,
 )
+from informers_spark.operators.dedup import _banded_self_join
 from informers_spark.pipelines.embed import embed
 
 
@@ -65,42 +68,20 @@ def candidate_pairs(
             a = surfaces.select(F.col(surface_col).alias("sa"))
             b = surfaces.select(F.col(surface_col).alias("sb"))
             return a.crossJoin(F.broadcast(b)).filter(F.col("sa") < F.col("sb"))
-    rows = k // bands
     sig = surfaces.select(
-        F.col(surface_col).alias("surface"),
+        F.col(surface_col).alias("id"),
         minhash_signature(_char_shingle_fps(F.col(surface_col)), k=k).alias("sig"),
     )
     # materialize once: the skew-guard aggregate and both self-join sides
     # would otherwise each recompute the per-char shingle fold
     banded = (
-        sig.select(
-            "surface", F.explode(minhash_bands(F.col("sig"), bands, rows)).alias("bk")
-        )
-        .select("surface", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        sig.select("id", F.explode(minhash_bands(F.col("sig"), bands, k // bands)).alias("bk"))
+        .select("id", "bk.band", "bk.key")
         .localCheckpoint()
     )
-
-    # skew guard: drop pathological buckets before the self-join — a
-    # window count over the (band, key) partitioning costs ONE shuffle
-    # (vs groupBy + re-join = two) and the self-join below reuses the
-    # same partitioning
-    banded = (
-        banded.withColumn(
-            "_bn", F.count("*").over(Window.partitionBy("band", "key"))
-        )
-        .filter(F.col("_bn") <= max_bucket)
-        .drop("_bn")
+    return _banded_self_join(banded, max_bucket).select(
+        F.col("a").alias("sa"), F.col("b").alias("sb")
     )
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a.surface") < F.col("b.surface"))
-        .select(F.col("a.surface").alias("sa"), F.col("b.surface").alias("sb"))
-        .distinct()
-    )
-    return pairs
 
 
 def link_entities(

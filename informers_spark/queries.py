@@ -1292,7 +1292,8 @@ def _band_bucket_sql(vec: str, band: int, r: int = 8, bands: int = 4) -> str:
 
 def _banded_blocks_sql(max_bucket: int | None, bands: int = 4, where: str = "") -> str:
     """(id, band, bucket) banded blocking CTE body mirroring
-    ann._banded_blocks, including the window-count skew guard."""
+    ann._banded_blocks; the QUALIFY window count states the skew guard's
+    semantics that dedup.drop_oversized_buckets implements."""
     unions = " UNION ALL ".join(
         f"SELECT vec_id AS id, {t} AS band, {_band_bucket_sql('embedding', t, bands=bands)} AS bucket "
         f"FROM embeddings {where}"

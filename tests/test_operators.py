@@ -153,7 +153,7 @@ def test_knn_lsh_recall_vs_bruteforce(spark):
 
 
 def test_embedding_neardup_guard_caps_buckets(spark):
-    """The max_bucket window guard must bound candidate pairs even when
+    """The max_bucket skew guard must bound candidate pairs even when
     every vector lands in one cell (all-identical vectors = the dense
     region that makes unguarded LSH quadratic)."""
     from pyspark.sql import functions as F
@@ -170,6 +170,97 @@ def test_embedding_neardup_guard_caps_buckets(spark):
     assert full == n * (n - 1) // 2
     # guard on: the hot cell is dropped entirely -> zero quadratic work
     assert embedding_neardup(one, threshold=0.0, max_bucket=200).count() == 0
+
+
+def _ref_link_candidate_pairs(surfaces, max_bucket, k=16, bands=8):
+    """Driver-side reference for link.candidate_pairs' LSH tier: lowercased
+    char 3-grams (the whole string when shorter), the portable rolling
+    fingerprint, minhash_coeffs(k) mins, and DISTINCT pairs sharing a
+    surviving (band, raw slice of mins) cell."""
+    from collections import defaultdict
+
+    from informers_spark.functions.similarity import minhash_coeffs
+
+    a, b = minhash_coeffs(k)
+    rows = k // bands
+    cells = defaultdict(set)
+    for s in surfaces:
+        low = s.lower()
+        fps = set()
+        for i in range(max(len(low) - 2, 1)):
+            acc = 0
+            for ch in low[i : i + 3]:
+                acc = (acc * 31 + ord(ch)) % FP_MOD
+            fps.add(acc)
+        mins = [min((a[j] * x + b[j]) % FP_MOD for x in fps) for j in range(k)]
+        for band in range(bands):
+            cells[(band, tuple(mins[band * rows : (band + 1) * rows]))].add(s)
+    return {
+        (x, y)
+        for members in cells.values()
+        if len(members) <= max_bucket
+        for x in members
+        for y in members
+        if x < y
+    }
+
+
+def _link_pairs(spark, surfaces, **kw):
+    from informers_spark.operators.link import candidate_pairs
+
+    df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
+    return {(r.sa, r.sb) for r in candidate_pairs(df, small_cutoff=0, **kw).collect()}
+
+
+def test_link_lsh_tier_matches_python_reference(spark):
+    """The LSH linking tier (small_cutoff=0; the KG fixtures never reach
+    it) equals a pure-Python MinHash/banding reference, so the bigint
+    band key partitions surfaces exactly like the raw signature slice."""
+    from informers_spark.functions.similarity import minhash_bands
+
+    surfaces = [
+        "acme corp", "Acme Corp", "ACME CORP", "acme corp.", "acme corporation",
+        "globex", "globex inc", "initech", "initech llc", "umbrella",
+        "umbrella corp", "hooli", "hooli xyz", "stark industries",
+        "stark industry", "wayne enterprises", "wayne enterprise",
+        "cyberdyne systems", "cyberdyne system", "soylent", "soylent green",
+        "tyrell corp", "tyrell corporation", "weyland yutani", "weyland-yutani",
+        "a", "b", "A", "ab", "ba", "xy",
+    ]
+    full = _ref_link_candidate_pairs(surfaces, max_bucket=1000)
+    capped = _ref_link_candidate_pairs(surfaces, max_bucket=3)
+    assert _link_pairs(spark, surfaces) == full
+    assert _link_pairs(spark, surfaces, max_bucket=3) == capped
+    # the fixture reaches real collisions, the short-string branch (("A",
+    # "a") share their only gram) and a cap that drops some cells but not all
+    assert ("A", "a") in capped and ("ACME CORP", "acme corp") in capped
+    assert ("acme corp", "acme corp.") in full - capped
+
+    with pytest.raises(ValueError, match="rows_per_band=3"):
+        minhash_bands(F.col("sig"), 4, 3)
+
+
+def test_link_hot_surface_cell_is_capped(spark):
+    """N distinct surfaces with identical 3-gram sets share every band
+    cell. With max_bucket below N the whole hot cell contributes zero
+    pairs while ordinary near-duplicates survive; above N all
+    N(N-1)/2 hot pairs appear."""
+    n = 12
+    hot = ["ab" + "cab" * i for i in range(1, n + 1)]
+    ordinary = ["stark industries", "stark industry", "wayne enterprises", "wayne enterprise"]
+    expected_ordinary = {
+        ("stark industries", "stark industry"),
+        ("wayne enterprise", "wayne enterprises"),
+    }
+
+    capped = _link_pairs(spark, hot + ordinary, max_bucket=n - 1)
+    assert not {p for p in capped if p[0] in hot or p[1] in hot}
+    assert expected_ordinary <= capped
+
+    full = _link_pairs(spark, hot + ordinary, max_bucket=n + 1)
+    hot_pairs = {p for p in full if p[0] in hot and p[1] in hot}
+    assert len(hot_pairs) == n * (n - 1) // 2
+    assert expected_ordinary <= full
 
 
 def _ref_simhash_pairs(hashes, max_hamming, bands=4, bits=31, max_bucket=10_000):

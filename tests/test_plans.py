@@ -208,20 +208,34 @@ def test_salt_buckets_knob_reaches_repartition_expression(spark):
     assert salt_partition(df, None, "repo", salt_buckets=7).columns == ["repo", "path"]
 
 
-def test_skew_guard_is_broadcast_anti_join(spark):
-    # the two-phase bucket-cap guard: over-limit keys come from a
-    # groupBy count (map-side partial agg — a hot cell never lands in
-    # one task) and are removed with a BROADCAST anti-join. A window
-    # count here would shuffle the entire pathological cell into a
-    # single window task just to drop it.
-    from informers_spark.operators.dedup import drop_oversized_buckets
+def _banded_operator_plan(spark, name):
+    from informers_spark.operators.dedup import embedding_neardup, minhash_pairs
+    from informers_spark.operators.link import candidate_pairs
 
-    blocks = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 3).alias("band"), (F.col("id") % 17).alias("key")
-    )
-    plan = _plan(drop_oversized_buckets(blocks, ["band", "key"], 10))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    if name == "minhash_pairs":
+        return _plan(minhash_pairs(spark.read.parquet(f"{SF}/documents.parquet")))
+    if name == "embedding_neardup":
+        return _plan(embedding_neardup(spark.read.parquet(f"{SF}/embeddings.parquet")))
+    surfaces = spark.createDataFrame([("acme corp",), ("acme corp.",)], "surface string")
+    return _plan(candidate_pairs(surfaces, small_cutoff=0))
+
+
+@pytest.mark.parametrize(
+    "operator", ["minhash_pairs", "embedding_neardup", "candidate_pairs"]
+)
+def test_skew_guard_is_broadcast_anti_join(spark, operator):
+    # every banded self-join goes through dedup._banded_self_join, whose
+    # two-phase bucket-cap guard takes over-limit keys from a groupBy
+    # count (map-side partial agg — a hot cell never lands in one task)
+    # and removes them with a BROADCAST anti-join. A window count here
+    # would shuffle the entire pathological cell into a single window
+    # task just to drop it.
+    plan = _banded_operator_plan(spark, operator)
+    tree = plan.split("\n\n")[0]
+    # one guard, planned once under each side of the one self-join
+    assert tree.count("LeftAnti") == tree.count("BroadcastHashJoin LeftAnti") == 2, tree
     assert "Window" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
